@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.queries.QueryDef
 
 /** Benchmark main (driver contract): runs every SparkEntry query on
@@ -56,40 +55,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Generated-class cache sized to the workload (round-14, guide
-      // §1.2 step 3): the default 100 entries cannot hold one pass of
-      // this 231-query registry, so EVERY pass re-Janino-compiled
-      // every query's codegen units — measured 211.8 s → 151.6 s
-      // (×0.72) on the identical 3-pass protocol, 181 queries faster,
-      // none slower beyond noise. A long-lived driver serving many
-      // distinct queries sizes this cache the same way; it is
-      // workload-sized (compiled classes), not data-sized, so the
-      // setting is scale-independent. Parameterized for the driver's
-      // low-core runs and future registry growth.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "8000"))
-      // Never use the bypass-merge shuffle writer (round-14, guide
-      // §1.1 empirical loop): stack-sampling the whole bench showed
-      // java.io.FileOutputStream.open0 as the TOP executor CPU frame
-      // — BypassMergeSortShuffleWriter opens numPartitions files per
-      // map task, which at this scale factor is pure filesystem
-      // churn (32 creates+deletes per task for a few KB of shuffle
-      // data). The sort writer opens ~1 file per task. Measured
-      // 138.1 s → 115.5 s (with the same round's expression fixes)
-      // on the 3-pass protocol, 1 query regressed > 0.1 s. At real
-      // tiers shuffle partition counts exceed the default threshold
-      // (200), so bypass never fires and this setting is a NO-OP at
-      // scale — it only removes a small-scale measurement artifact.
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS_MERGE", "1"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local()
 
     Seq("region", "nation", "customer", "supplier", "part", "orders",
       "lineitem", "documents", "embeddings").foreach { t =>
@@ -100,9 +66,18 @@ object Bench {
     catch { case _: Throwable => () }
 
     val named = SparkEntry.queries.toSeq.sortBy(_._1)
-    def once(fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+    // a failed sample reads -1.0 and drops out of `total`; the query's
+    // first failure is reported under "failed" so it cannot pass for
+    // a speedup
+    val failed = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    def once(name: String, fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()
-      try { consume(fn(spark, sfDir)) } catch { case _: Throwable => return -1.0 }
+      try { consume(fn(spark, sfDir)) } catch { case e: Throwable =>
+        val msg = s"${e.getClass.getSimpleName}: ${e.getMessage}"
+        System.err.println(s"[bench] $name failed: $msg")
+        failed.getOrElseUpdate(name, msg)
+        return -1.0
+      }
       val dt = (System.nanoTime() - t0) / 1e9
       spark.catalog.clearCache()
       dt
@@ -122,10 +97,10 @@ object Bench {
         sys.env.getOrElse("SPARK_GRAFT_WARMUP_PASSES", "1").trim.toInt)
       .getOrElse(1).max(0)
     (1 to warmupPasses).foreach { _ =>
-      named.foreach { case (_, fn) => once(fn) }
+      named.foreach { case (name, fn) => once(name, fn) }
     }
     val passes = (1 to nPasses).map { _ =>
-      named.map { case (name, fn) => name -> once(fn) }.toMap
+      named.map { case (name, fn) => name -> once(name, fn) }.toMap
     }
     // at exactly 2 passes, >2x cold/warm disagreement (host steal)
     // triggers a third targeted sample, recorded separately so
@@ -139,7 +114,7 @@ object Bench {
         if (samples.exists(_ < 0)) -1.0
         else if (nPasses == 2 &&
             samples.max > 2 * samples.min && samples.max - samples.min > 0.5) {
-          val c = once(fn)
+          val c = once(name, fn)
           tiebreaks(name) = c
           if (c < 0) samples.min else math.min(samples.min, c)
         } else samples.min
@@ -162,9 +137,12 @@ object Bench {
       .mkString(",")
     val tbJson = tiebreaks
       .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+    val failedJson = failed
+      .map { case (k, v) => "\"" + k + "\":\"" + Jsonl.esc(v) + "\"" }
+      .mkString("{", ",", "}")
     val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
       s"""$passMaps,""" +
-      s""""queries_tiebreak":$tbJson,"passes":$nPasses,""" +
+      s""""queries_tiebreak":$tbJson,"failed":$failedJson,"passes":$nPasses,""" +
       s""""warmup_passes":$warmupPasses,""" +
       s""""consumption":"noop","sf":"$sfDir"}"""
     println(json)

@@ -12,8 +12,8 @@ import graft.functions._
   * DataFrame API:
   *
   * {{{
-  * SparkSession.builder().withExtensions(new GraftExtensions)
-  * // or: --conf spark.sql.extensions=graft.GraftExtensions
+  * --conf spark.sql.extensions=graft.GraftExtensions
+  * // or, on a session builder: .withExtensions(new GraftExtensions)
   * spark.sql("SELECT simhash_32(word_shingles(split(text,' '), 1)) ...")
   * }}}
   *

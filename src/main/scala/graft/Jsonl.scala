@@ -1,11 +1,10 @@
 package graft
 
-/** Shared helper for the artifact-writing measurement mains
-  * (Q228Diag, AdmitScale, ScalingBench, BroadcastAudit): caller-
-  * supplied strings (data-dir paths) are interpolated into hand-built
-  * JSONL lines, and a path containing a quote or backslash would
-  * silently corrupt the committed artifact. Escape the two JSON
-  * string metacharacters plus control chars before interpolation.
+/** Shared helper for the JSON-writing mains (Bench, ScalingBench):
+  * caller-supplied strings (data-dir paths, failure messages) are
+  * interpolated into hand-built JSON lines, and one containing a quote
+  * or backslash would silently corrupt the artifact. Escape the two
+  * JSON string metacharacters plus control chars before interpolation.
   */
 object Jsonl {
   def esc(s: String): String =

@@ -1,8 +1,6 @@
 package graft
 
 import java.time.LocalDate
-import scala.concurrent.{Await, ExecutionContext, Future}
-import scala.concurrent.duration.Duration
 import scala.util.{Failure, Success, Try}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -54,20 +52,13 @@ object Pipeline {
   def ingest(spark: SparkSession, zones: LakeZones, landingDir: String,
              specs: Seq[SourceSpec], ingestDate: LocalDate,
              parallelism: Int = 4): Unit = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(parallelism)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    try {
-      val jobs = specs.map { spec =>
-        Future {
-          val table = spec.sourceFile.stripSuffix(".csv")
-          val schema = SchemaFor.getOrElse(table,
-            sys.error(s"no schema registered for $table"))
-          val df = LakeIO.readCsv(spark, s"$landingDir/${spec.sourceFile}", schema)
-          LakeIO.writeBronze(df, zones, spec.sinkPath, ingestDate)
-        }
-      }
-      Await.result(Future.sequence(jobs), Duration.Inf)
-    } finally pool.shutdown()
+    Branches.all(specs.map { spec => () =>
+      val table = spec.sourceFile.stripSuffix(".csv")
+      val schema = SchemaFor.getOrElse(table,
+        sys.error(s"no schema registered for $table"))
+      val df = LakeIO.readCsv(spark, s"$landingDir/${spec.sourceFile}", schema)
+      LakeIO.writeBronze(df, zones, spec.sinkPath, ingestDate)
+    }, parallelism)
   }
 
   /** C7 retry wrapper: `attempts` total tries, `onFailure` alert hook

@@ -2,7 +2,6 @@ package graft
 
 import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Scale-curve harness: `runMain graft.ScalingBench <dir1,dir2,...> <q1,q2,...>`
   * times each named SparkEntry query at each data directory and logs,
@@ -22,21 +21,7 @@ object ScalingBench {
   def main(args: Array[String]): Unit = {
     val dirs = args(0).split(",").toSeq
     val names = args(1).split(",").toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // registry-sized codegen cache (see Bench.scala rationale)
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "8000"))
-      // sort writer, never bypass-merge — measurement parity with
-      // Bench (see the rationale there); no-op at real tiers
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS_MERGE", "1"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local()
 
     val shufRecords = new AtomicLong
     val shufBytes = new AtomicLong

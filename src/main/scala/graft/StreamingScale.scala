@@ -154,18 +154,11 @@ object StreamingScale {
     val tiers =
       if (args.length > 1) args.drop(1).toSeq
       else Seq("target/scale/sf0.5", "target/scale/sf1.0", "target/scale/sf2.0")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // drive() derives rows_in/batches from recentProgress; the
-      // default retention (100) could silently truncate a tier with
-      // many no-data batches — raise it and assert under it in drive()
-      .config("spark.sql.streaming.numRecentProgressUpdates", "10000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
+    // drive() derives rows_in/batches from recentProgress; the
+    // default retention (100) could silently truncate a tier with
+    // many no-data batches — raise it and assert under it in drive()
+    spark.conf.set("spark.sql.streaming.numRecentProgressUpdates", "10000")
     import spark.implicits._
 
     val outPath = java.nio.file.Paths.get(out)

@@ -83,15 +83,12 @@ object LayoutQueries {
       // the three layout audits are independent single-branch jobs —
       // materialize their range-sort checkpoints CONCURRENTLY (guide
       // §2.6) so the second and third overlap the first's tail
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val branches = Await.result(Future.sequence(Seq(
-        Future(layoutSummary(base, "a_insertion", Seq(col("o_orderkey")))),
-        Future(layoutSummary(base, "b_linear_x",
-          Seq(col("x"), col("o_orderkey")))),
-        Future(layoutSummary(base, "c_zorder",
-          Seq(col("z"), col("o_orderkey")))))), Duration.Inf)
+      val branches = graft.Branches.all(Seq(
+        () => layoutSummary(base, "a_insertion", Seq(col("o_orderkey"))),
+        () => layoutSummary(base, "b_linear_x",
+          Seq(col("x"), col("o_orderkey"))),
+        () => layoutSummary(base, "c_zorder",
+          Seq(col("z"), col("o_orderkey")))), parallelism = 3)
       branches.reduce(_.unionAll(_)).orderBy(col("layout"))
     },
     Some(s"""

@@ -1175,13 +1175,9 @@ object OpsQueries {
       }
       // independent audits built concurrently (guide §2.6, the
       // q156/q219/q153 pattern) — round-15
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val branches = Await.result(Future.sequence(Seq(
-        Future(audit("arrival", Seq(col("mk"), col("doc_id")))),
-        Future(audit("sorted", Seq(col("len"), col("doc_id")))))),
-        Duration.Inf)
+      val branches = graft.Branches.all(Seq(
+        () => audit("arrival", Seq(col("mk"), col("doc_id"))),
+        () => audit("sorted", Seq(col("len"), col("doc_id")))), parallelism = 2)
       branches.reduce(_.unionAll(_)).orderBy(col("strategy"))
     },
     Some(s"""
@@ -1506,12 +1502,9 @@ object OpsQueries {
       // materialize their range-sort checkpoints CONCURRENTLY (guide
       // §2.6, the q156 pattern) so the second overlaps the first's
       // eager Ids materialization instead of queuing behind it
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val branches = Await.result(Future.sequence(Seq(
-        Future(audit("arrival", col("mk"))),
-        Future(audit("sorted", col("o_orderkey"))))), Duration.Inf)
+      val branches = graft.Branches.all(Seq(
+        () => audit("arrival", col("mk")),
+        () => audit("sorted", col("o_orderkey"))), parallelism = 2)
       branches.reduce(_.unionAll(_)).orderBy(col("layout"))
     },
     Some("""

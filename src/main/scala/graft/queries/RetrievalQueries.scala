@@ -70,12 +70,9 @@ object RetrievalQueries {
       // concurrently (guide §2.6, the q156/q219 pattern) so the
       // semantic side's eager Ids materialization overlaps the
       // lexical side's instead of queuing behind it (round-15)
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val lexF = Future(graft.operators.Ids
+      val lexRank = () => graft.operators.Ids
         .addContiguousIds(lexScore, Seq(col("score").desc, col("doc_id")), "lex_rank")
-        .select(col("doc_id"), col("lex_rank")))
+        .select(col("doc_id"), col("lex_rank"))
       // single query ⇒ bruteForceTopK's per-query window would hold
       // the whole corpus in one partition; score inline and rank with
       // the same range-partitioned discipline as the lexical side
@@ -87,11 +84,10 @@ object RetrievalQueries {
         .join(qv, col("q_id") =!= col("n_id"))
         .select(col("n_id"),
           graft.functions.VectorFunctions.cosine(col("q_v"), col("n_v")).as("cos"))
-      val semF = Future(graft.operators.Ids
+      val semRank = () => graft.operators.Ids
         .addContiguousIds(semScored, Seq(col("cos").desc, col("n_id")), "sem_rank")
-        .select(col("n_id").as("doc_id"), col("sem_rank")))
-      val Seq(lex, sem) =
-        Await.result(Future.sequence(Seq(lexF, semF)), Duration.Inf)
+        .select(col("n_id").as("doc_id"), col("sem_rank"))
+      val Seq(lex, sem) = graft.Branches.all(Seq(lexRank, semRank), parallelism = 2)
       lex.join(sem, Seq("doc_id"), "full_outer")
         .select(col("doc_id"),
           coalesce(col("lex_rank"), lit(0L)).as("lex_rank"),

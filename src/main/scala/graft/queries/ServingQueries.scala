@@ -250,9 +250,6 @@ object ServingQueries {
   private val q106 = QueryDef(
     "q106_rfm_segments",
     (s, dir) => {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
       // one RFM aggregate, checkpointed: the three rank branches and
       // the count read cached blocks instead of re-aggregating orders
       val m = graft.operators.Checkpoints.truncate(table(s, dir, "orders")
@@ -269,13 +266,13 @@ object ServingQueries {
       // per row. Ranks are identical to the chained form: the sort
       // keys never included the previously-attached rank columns.
       def rankOf(ord: Seq[org.apache.spark.sql.Column], name: String) =
-        Future(Ids.addContiguousIds(m, ord, name)
-          .select(col("o_custkey"), col(name)))
-      val Seq(rr, ff, mmr) = Await.result(Future.sequence(Seq(
+        () => Ids.addContiguousIds(m, ord, name)
+          .select(col("o_custkey"), col(name))
+      val Seq(rr, ff, mmr) = graft.Branches.all(Seq(
         rankOf(Seq(col("last_ms").desc, col("o_custkey")), "r_rk"),
         rankOf(Seq(col("frequency").desc, col("o_custkey")), "f_rk"),
-        rankOf(Seq(col("m_dec").desc, col("o_custkey")), "m_rk"))),
-        Duration.Inf)
+        rankOf(Seq(col("m_dec").desc, col("o_custkey")), "m_rk")),
+        parallelism = 3)
       val ranked = m.join(rr, "o_custkey").join(ff, "o_custkey")
         .join(mmr, "o_custkey")
       val n = broadcast(m.groupBy().agg(count(lit(1)).as("n_rows")))

@@ -279,6 +279,34 @@ class PipelineSpec extends SparkSpec {
       plan.take(400))
   }
 
+  test("Branches.all runs thunks concurrently, in input order, on a pool it drains") {
+    import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+    val both = new CountDownLatch(2)
+    val workers = new ConcurrentLinkedQueue[Thread]
+    // each thunk waits for the other: serial execution would time out
+    def meet(v: Int) = () => {
+      workers.add(Thread.currentThread)
+      both.countDown()
+      assert(both.await(30, TimeUnit.SECONDS), "branches did not run concurrently")
+      v
+    }
+    assert(Branches.all(Seq(meet(1), meet(2)), parallelism = 2) == Seq(1, 2))
+    workers.forEach { t =>
+      t.join(10000)
+      assert(!t.isAlive, s"pool thread ${t.getName} outlived the call")
+    }
+    assert(Branches.all(Seq(3, 1, 2).map(v => () => { Thread.sleep(v * 50L); v }),
+      parallelism = 3) == Seq(3, 1, 2))
+  }
+
+  test("Branches.all rethrows a failing thunk's exception") {
+    val e = intercept[IllegalStateException] {
+      Branches.all(Seq(() => 1, () => throw new IllegalStateException("boom")),
+        parallelism = 2)
+    }
+    assert(e.getMessage == "boom")
+  }
+
   test("csv dialect: quoted fields with commas and escapes") {
     val dir = mkTmp()
     Files.writeString(Paths.get(s"$dir/F0101.csv"),

@@ -26,14 +26,31 @@ class PlanAuditSpec extends SparkSpec {
     * not by corpus size, so the single partition holds O(constant)
     * rows at any scale — audited in the owning query's docstring.
     * Anything NOT in the list that plans a global window is a 100 TB
-    * regression and fails the tripwire. The list itself (query →
-    * measured frame-row cap, plus the growth-gated subset) lives in
-    * `FrameAudit` in main — ONE definition shared with the
-    * measurement tool, so the two can't drift. */
-  private val boundedGlobalWindowFrames: Map[String, Long] =
-    FrameAudit.FrameCaps
+    * regression and fails the tripwire. Each entry maps the query to
+    * the measured frame-row cap its docstring claims: the domain bound
+    * one task must hold at any corpus size. The measured test below
+    * checks every cap at two sfs. */
+  private val FrameCaps: Map[String, Long] = Map(
+    "q102_cumulative_users" -> 40L,      // per-day frame (#distinct days; 30-day events span)
+    "q149_jaro_winkler_linkage" -> 2000L, // boundary stitch: ≤ 4 rows per name block (+ growth gate)
+    "q165_histogram_percentiles" -> 56001L, // distinct 2dp values; domain [0.00, 560.00]
+    "q167_waterfill_budget" -> 25L,      // per-source frame (20 distinct sources)
+    "q168_km_conversion" -> 10L,         // Kaplan-Meier distinct obs times ≤ 8
+    "q177_auc_stopword_en" -> 56001L,    // distinct 2dp scores; same value domain
+    "q180_ks_statistic" -> 56001L,       // distinct 2dp values; same value domain
+    "q188_window_funnel" -> 8L,          // funnel-step frame (#steps)
+    "q189_sprt_stopping" -> 60L,         // per-variant sequential frame (30 rows)
+    "q213_pareto_suppliers" -> 2000L,    // union of 32 partial frontiers (+ growth gate)
+    "q217_slo_burn" -> 744L,             // per-hour SLO frame (≤ 31 days × 24 h)
+    "q223_watermark_audit" -> 65536L     // block-maxima frame; block size adapts to cap #blocks
+  )
 
-  private val growthGated: Set[String] = FrameAudit.GrowthGated
+  /** The two allowlist entries whose bound is a GROWTH argument
+    * (partial-frontier unions / per-block stitches shrink relative to
+    * the corpus) rather than a fixed value domain: the measured test
+    * additionally requires the frame to grow ≤ 5× under a 10× corpus. */
+  private val GrowthGated: Set[String] = Set(
+    "q149_jaro_winkler_linkage", "q213_pareto_suppliers")
 
   test("global windows only ever run over domain-bounded frames (allowlist)") {
     import org.apache.spark.sql.execution.SparkPlan
@@ -56,7 +73,7 @@ class PlanAuditSpec extends SparkSpec {
             !w.child.output.exists(a => graft.operators.Ids.isOffsetsInternal(a.name)) => w
         }.nonEmpty
         spark.catalog.clearCache()
-        if (hasGlobal && !boundedGlobalWindowFrames.contains(name)) Some(name)
+        if (hasGlobal && !FrameCaps.contains(name)) Some(name)
         else None
     }
     assert(offenders.isEmpty,
@@ -90,7 +107,7 @@ class PlanAuditSpec extends SparkSpec {
       spark.catalog.clearCache()
       n
     }
-    val failures = boundedGlobalWindowFrames.toSeq.sortBy(_._1).flatMap {
+    val failures = FrameCaps.toSeq.sortBy(_._1).flatMap {
       case (name, cap) =>
         val small = maxGlobalFrameRows(name, "/root/testdata/sf0.01")
         val big = maxGlobalFrameRows(name, "/root/testdata/sf0.1")
@@ -99,7 +116,7 @@ class PlanAuditSpec extends SparkSpec {
             Seq(s"$name: frame $small@sf0.01 / $big@sf0.1 exceeds cap $cap")
           else Nil
         val growthBad =
-          if (growthGated(name) && big > 5L * math.max(small, 1L))
+          if (GrowthGated(name) && big > 5L * math.max(small, 1L))
             Seq(s"$name: frame grew ${small}→$big under a 10× corpus " +
               s"(> 5× — the sub-linear claim is broken)")
           else Nil
@@ -117,7 +134,7 @@ class PlanAuditSpec extends SparkSpec {
     * failure: the checkpointed shingle table's garbage estimate put
     * the doc→hash-array relation on the broadcast side, and nothing
     * ever flipped it back (fixed in round 9 with shuffle-join hints;
-    * the registry-wide measurement lives in graft.BroadcastAudit +
+    * the registry-wide measurement is frozen in
     * docs/broadcast_audit_r9.jsonl). Planner-CHOSEN broadcasts are
     * fine and deliberately not gated: their estimates come from real
     * file/shuffle sizes and flip to shuffle joins at larger scale.
@@ -132,8 +149,8 @@ class PlanAuditSpec extends SparkSpec {
     * centroid count). */
   private val forcedBroadcastAllowlist: Map[String, String] = Map(
     // Bounds below are cross-checked against the committed census
-    // docs/broadcast_audit_r11.jsonl (graft.BroadcastAudit at sf0.01 +
-    // sf0.1): every entry's build side must appear there with rows
+    // docs/broadcast_audit_r11.jsonl (taken at sf0.01 + sf0.1): every
+    // entry's build side must appear there with rows
     // matching its claim. q06_pit_fact was trimmed by that census —
     // its calendar broadcast's estimate now rides real file stats, so
     // it is planner-chosen, not forced.
