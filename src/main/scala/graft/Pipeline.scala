@@ -102,8 +102,9 @@ object Pipeline {
         col("ABAT1").as("SearchType"), col("ABAC01").as("CategoryCode"))
       val spec = Scd2.Spec("CustomerKey", "CustomerID",
         Seq("CustomerName", "SearchType", "CategoryCode"))
-      val dim0 = Try(LakeIO.readGold(spark, zones, "dim_customer"))
-        .getOrElse(Scd2.emptyDim(spark, incoming, spec))
+      // through swap recovery: a dimension caught in a replaceGold
+      // rename window continues its history instead of re-seeding
+      val dim0 = LakeIO.readGoldIfPresent(spark, zones, "dim_customer")
       // first-ever key versions get beginning-of-time validity so
       // historical facts resolve in the PIT join (SURVEY.md §7.4.3)
       val dim1 = Scd2.merge(dim0, incoming, spec, nowCol,
@@ -122,11 +123,12 @@ object Pipeline {
       // exclude this run's own load_id so a retry re-assigns the SAME
       // key range instead of stacking on its partial previous attempt.
       val loadId = ingestDate.toString
-      val keyOffset: Long = Try {
-        LakeIO.readGold(spark, zones, "fact_sales")
-          .filter(col("load_id") =!= loadId)
-          .agg(coalesce(max(col("SalesKey")), lit(0L))).head().getLong(0)
-      }.getOrElse(0L)
+      // Only a missing table starts at 0; a failed read fails the load.
+      val keyOffset: Long =
+        LakeIO.readGoldIfPresent(spark, zones, "fact_sales").fold(0L) {
+          _.filter(col("load_id") =!= loadId)
+            .agg(coalesce(max(col("SalesKey")), lit(0L))).head().getLong(0)
+        }
       val fact = FactLoad.loadFactSales(
         silver,
         LakeIO.readGold(spark, zones, "dim_customer"),

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.functions.JdeFunctions.rowHash
@@ -58,25 +58,13 @@ object Scd2 {
     Seq("IsActive", "ValidFrom", "ValidTo", "RowHash",
         "CreatedDate", "ModifiedDate")
 
-  /** An empty dimension with the SCD2 contract derived from an
-    * incoming-batch schema. */
-  def emptyDim(spark: SparkSession, incoming: DataFrame, spec: Spec): DataFrame = {
-    val base = incoming.schema.fields.map(f => StructField(f.name, f.dataType, f.nullable))
-    val schema = StructType(
-      StructField(spec.surrogateKey, LongType, nullable = false) +: base :+
-        StructField("IsActive", BooleanType, nullable = false) :+
-        StructField("ValidFrom", TimestampType, nullable = false) :+
-        StructField("ValidTo", TimestampType, nullable = true) :+
-        StructField("RowHash", StringType, nullable = false) :+
-        StructField("CreatedDate", TimestampType, nullable = false) :+
-        StructField("ModifiedDate", TimestampType, nullable = false))
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-  }
-
   /** Merge one incoming batch into the dimension; returns the complete
     * next dimension state.
     *
-    * @param dim      current dimension (SCD2 contract columns)
+    * @param dim      current dimension (SCD2 contract columns), or None
+    *                 for the seed load: every row is a new key and only
+    *                 the key assignment's checkpoint runs. `Some` adds
+    *                 one eager action, the max-key probe below.
     * @param incoming batch with businessKey + attribute columns; must
     *                 have at most one row per business key
     * @param spec     key/tracked-column spec
@@ -104,7 +92,7 @@ object Scd2 {
     *                 build memory; the expire set is gated by the same
     *                 measurement since changed keys ⊆ active keys.
     */
-  def merge(dim: DataFrame, incoming: DataFrame, spec: Spec, now: Column,
+  def merge(dim: Option[DataFrame], incoming: DataFrame, spec: Spec, now: Column,
             broadcastDim: Boolean = true,
             newKeyValidFrom: Option[Column] = None,
             dimBroadcastMaxRows: Long = 4000000L): DataFrame = {
@@ -115,21 +103,20 @@ object Scd2 {
     val hashed = incoming.withColumn(
       "RowHash", rowHash(spec.trackedCols.map(col): _*))
 
-    // Seed-load fast path: merging into an EMPTY dimension (zero
-    // partitions — [[emptyDim]]'s shape) has no lookup to probe, no
-    // versions to expire, no max key. Every incoming row is a new
-    // key; skip the whole join/split/expire machinery and its
-    // broadcast-exchange jobs.
-    if (dim.rdd.getNumPartitions == 0) {
-      val seeded = Ids.addContiguousIds(
-          hashed, Seq(col(spec.businessKey)), spec.surrogateKey)
-        .withColumn("IsActive", lit(true))
-        .withColumn("ValidFrom", newKeyValidFrom.getOrElse(now))
-        .withColumn("ValidTo", lit(null).cast(TimestampType))
-        .withColumn("CreatedDate", now)
-        .withColumn("ModifiedDate", now)
-        .select(spec.surrogateKey, attrCols ++ MetaCols: _*)
-      return seeded
+    val current = dim match {
+      case Some(d) => d
+      case None =>
+        // Seed load: no lookup to probe, no versions to expire, no max
+        // key. Every incoming row is a new key, so the join/split/expire
+        // machinery and its broadcast-exchange jobs are skipped.
+        return Ids.addContiguousIds(
+            hashed, Seq(col(spec.businessKey)), spec.surrogateKey)
+          .withColumn("IsActive", lit(true))
+          .withColumn("ValidFrom", newKeyValidFrom.getOrElse(now))
+          .withColumn("ValidTo", lit(null).cast(TimestampType))
+          .withColumn("CreatedDate", now)
+          .withColumn("ModifiedDate", now)
+          .select(spec.surrogateKey, attrCols ++ MetaCols: _*)
     }
 
     // Key continuation + broadcast sizing via ONE eager probe.
@@ -145,14 +132,14 @@ object Scd2 {
     // re-decides itself as the dimension grows — the q129 failure
     // class. Measuring costs nothing extra (the probe job already
     // runs) and makes the broadcast decision track reality.
-    val probe = dim.agg(
+    val probe = current.agg(
       coalesce(max(col(spec.surrogateKey)), lit(0L)),
       count(when(col("IsActive"), lit(1)))).head()
     val maxKey: Long = probe.getLong(0)
     val activeRows: Long = probe.getLong(1)
     val dimFitsBroadcast = activeRows <= dimBroadcastMaxRows
 
-    val activeLookup0 = dim.filter(col("IsActive")).select(
+    val activeLookup0 = current.filter(col("IsActive")).select(
       col(spec.businessKey).as("_bk"),
       col(spec.surrogateKey).as("_existingKey"),
       col("RowHash").as("_existingHash"))
@@ -194,12 +181,12 @@ object Scd2 {
     // planner shuffle both semi/anti joins.
     val expireSet =
       if (broadcastDim && dimFitsBroadcast) broadcast(changedKeys) else changedKeys
-    val expired = dim.join(expireSet, Seq(spec.surrogateKey), "left_semi")
+    val expired = current.join(expireSet, Seq(spec.surrogateKey), "left_semi")
       .withColumn("IsActive", lit(false))
       .withColumn("ValidTo", now)
       .withColumn("ModifiedDate", now)
       .select(dimCols: _*)
-    val untouched = dim.join(expireSet, Seq(spec.surrogateKey), "left_anti")
+    val untouched = current.join(expireSet, Seq(spec.surrogateKey), "left_anti")
       .select(dimCols: _*)
 
     untouched.unionByName(expired).unionByName(inserted.select(dimCols: _*))

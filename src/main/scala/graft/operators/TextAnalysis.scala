@@ -216,7 +216,7 @@ object TextAnalysis {
     // spread re-runs the exchange per consumer, the q142/q154
     // multi-consumer tax). On a real tier the scan already carries
     // ≥ cores partitions and the frame flows through untouched — the
-    // spreadTable contract. Callers that pass an already-wide frame
+    // Spread scale contract. Callers that pass an already-wide frame
     // (dropDuplicateSpans' own checkpoint) hit the no-op path too.
     val toksW = {
       val wide = Spread.wide(toks)

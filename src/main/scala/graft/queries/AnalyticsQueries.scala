@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
 import graft.functions.TextFunctions
 import graft.queries.ExtensionQueries.toksSql
-import graft.queries.QueryDef.{eventsTable, spreadTable, table}
+import graft.queries.QueryDef.{eventsTable, table}
 import graft.functions.DecimalExprs.{dec2, cents2}
 
 /** Round-3 third widening: corpus-governance analytics — rule-based

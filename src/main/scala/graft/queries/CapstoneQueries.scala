@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType, StringType}
 import graft.functions.TextFunctions
 import graft.queries.ExtensionQueries.toksSql
-import graft.queries.QueryDef.{eventsTable, spreadTable, table}
+import graft.queries.QueryDef.{eventsTable, table}
 
 /** Round-4 capstone tier (q196–q200): the batch twin of the streaming
   * CEP pattern detector, a pseudonymization-soundness audit, weekly

@@ -4,8 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType, StringType}
-import graft.operators.{Reconcile, Sampling, TextAnalysis}
-import graft.queries.QueryDef.{spreadTable, table}
+import graft.operators.{Reconcile, Sampling, Spread, TextAnalysis}
+import graft.queries.QueryDef.table
 import graft.functions.DecimalExprs.{dec2, cents2}
 
 /** Round-3 widening: distribution-window family, PII scrubbing,
@@ -848,7 +848,7 @@ object CurationQueries {
       // passes on ONE task. Checkpoint it once, materialized wide
       // (Spread.wide is a no-op at multi-split tiers).
       val base = graft.operators.Checkpoints.truncate(
-        graft.operators.Spread.wide(table(s, dir, "documents")).select(
+        Spread.wide(table(s, dir, "documents")).select(
           col("doc_id"), col("source"),
           substring(md5(col("doc_id").cast(StringType)), 1, 1)
             .isin("0", "1").as("is_eval"),

@@ -4,9 +4,9 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
 import graft.functions.TextFunctions
-import graft.operators.{Quantization, Similarity}
+import graft.operators.{Quantization, Similarity, Spread}
 import graft.queries.ExtensionQueries.{cosSql, toksSql}
-import graft.queries.QueryDef.{spreadTable, table}
+import graft.queries.QueryDef.table
 
 /** Round-4 continuation: evaluation tier — graded retrieval quality
   * (nDCG of the compressed ANN ranking against the exact float
@@ -31,7 +31,7 @@ object EvalQueries {
   private val q173 = QueryDef(
     "q173_ndcg_quantized",
     (s, dir) => {
-      val e = spreadTable(s, dir, "embeddings")
+      val e = Spread.wide(table(s, dir, "embeddings"))
       val quantized = Quantization.scalarQuantize(e, Quantization.dimScales(e))
       val qIds = QueryDef.annWorkload(e).select(col("vec_id"))
       val approx = Quantization.quantizedTopK(quantized, qIds, k = 5)

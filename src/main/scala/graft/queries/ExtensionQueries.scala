@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.functions.{RollingHashExpr, TextFunctions, VectorFunctions}
 import graft.functions.TextFunctions._
-import graft.operators.{Dedup, EventWindows, Similarity, TextAnalysis}
-import QueryDef.{eventsTable, spreadTable, table}
+import graft.operators.{Dedup, EventWindows, Similarity, Spread, TextAnalysis}
+import QueryDef.{eventsTable, table}
 import graft.functions.DecimalExprs.{dec2, cents2}
 
 /** Extension query set — the LLM-training-data-pipeline operators
@@ -263,12 +263,12 @@ object ExtensionQueries {
     * offset contract on [[mutantOffset]]). */
   private[graft] def augmentedDocs(s: SparkSession, dir: String,
                                    spread: Boolean = false): DataFrame = {
-    // `spread = true` → scale-adaptive scan spread (QueryDef.spreadTable
+    // `spread = true` → scale-adaptive scan spread ([[Spread]]
     // rationale) for consumers whose per-row pipeline over the corpus
     // dominates one re-shuffle of the text; the default stays narrow for
     // the iterative-kernel consumers where extra stage width taxes every
     // tiny round (measured both ways in OPTIMIZATION_r14.md)
-    val d0 = if (spread) spreadTable(s, dir, "documents") else table(s, dir, "documents")
+    val d0 = if (spread) Spread.wide(table(s, dir, "documents")) else table(s, dir, "documents")
     val d = d0.select(col("doc_id"), col("text"), col("source"))
     val off = mutantOffset(d, "doc_id")
     d.unionByName(d.filter(col("doc_id") % 7 === 0).select(
@@ -651,7 +651,7 @@ object ExtensionQueries {
   private val q37 = QueryDef(
     "q37_knn_ivf",
     (s, dir) => {
-      val e = spreadTable(s, dir, "embeddings")
+      val e = Spread.wide(table(s, dir, "embeddings"))
       Similarity.ivfTopK(e, QueryDef.annWorkload(e), k = 5,
           centroidEvery = 50, nProbe = 2)
         .orderBy(col("q_id"), col("rank"))
@@ -757,7 +757,7 @@ object ExtensionQueries {
 
   private val q40 = QueryDef(
     "q40_text_profile",
-    (s, dir) => TextAnalysis.profile(spreadTable(s, dir, "documents"))
+    (s, dir) => TextAnalysis.profile(Spread.wide(table(s, dir, "documents")))
       .select(col("doc_id"),
         col("n_chars_measured"),
         col("n_tokens"),

@@ -3,7 +3,8 @@ package graft.queries
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType, StringType}
-import graft.queries.QueryDef.{spreadTable, table}
+import graft.operators.Spread
+import graft.queries.QueryDef.table
 
 /** Round-4 continuation: corpus-infrastructure hygiene — embedding
   * whitening with an isotropy audit (the vector-space normalization
@@ -30,7 +31,7 @@ object HygieneQueries {
   private val q170 = QueryDef(
     "q170_whitening_audit",
     (s, dir) => {
-      val ex = spreadTable(s, dir, "embeddings")
+      val ex = Spread.wide(table(s, dir, "embeddings"))
         .select(col("vec_id"), posexplode(col("embedding")).as(Seq("pos", "x")))
         .select(col("vec_id"), col("pos").cast(LongType).as("pos"),
           col("x").cast(DoubleType).as("x"))
@@ -321,7 +322,7 @@ object HygieneQueries {
     (s, dir) => {
       import org.apache.spark.sql.types.StringType
       val dec9 = DecimalType(28, 9)
-      val ex = spreadTable(s, dir, "embeddings")
+      val ex = Spread.wide(table(s, dir, "embeddings"))
         .filter(conv(substring(md5(col("vec_id").cast(StringType)), 1, 15),
           16, 10).cast(LongType) % 100 < 20)
         .select(col("vec_id"), posexplode(col("embedding")).as(Seq("pos0", "x")))

@@ -3,7 +3,8 @@ package graft.queries
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
-import graft.queries.QueryDef.{eventsTable, spreadTable, table}
+import graft.operators.Spread
+import graft.queries.QueryDef.{eventsTable, table}
 import graft.queries.ExtensionQueries.toksSql
 import graft.functions.DecimalExprs.{dec2, cents2}
 
@@ -314,8 +315,8 @@ object LakehouseQueries {
     (s, dir) => {
       // try_divide/try_cast per row dominate and fuse into the scan —
       // spread the single-split fixture scan (1.24 s single-task
-      // runtime in the job log; QueryDef.spreadTable rationale)
-      spreadTable(s, dir, "orders")
+      // runtime in the job log; Spread rationale)
+      Spread.wide(table(s, dir, "orders"))
         .select(
           expr("try_divide(o_totalprice, o_orderkey % 3)").as("d"),
           expr("try_cast(o_orderpriority AS INT)").as("p"),
@@ -527,7 +528,7 @@ object LakehouseQueries {
     "q126_minhash_accuracy",
     (s, dir) => {
       import graft.functions.{MinhashExprs, TextFunctions, TextExprs}
-      val sh = spreadTable(s, dir, "documents")
+      val sh = Spread.wide(table(s, dir, "documents"))
         .select(col("doc_id"),
           array_distinct(TextExprs.word_shingles(
             TextFunctions.tokens(col("text")), 3)).as("sh"))
@@ -1154,7 +1155,7 @@ object LakehouseQueries {
     "q141_davies_bouldin",
     (s, dir) => {
       import graft.operators.Clustering
-      val e = spreadTable(s, dir, "embeddings")
+      val e = Spread.wide(table(s, dir, "embeddings"))
       val assigned = Clustering.assignCells(e, Clustering.seedCentroids(e, 50))
       Clustering.daviesBouldin(assigned).orderBy(col("cell"))
     },

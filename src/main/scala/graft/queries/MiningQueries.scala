@@ -4,9 +4,9 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
 import graft.functions.TextFunctions
-import graft.operators.{Clustering, Pruning, Sketches}
+import graft.operators.{Clustering, Pruning, Sketches, Spread}
 import graft.queries.ExtensionQueries.{augmentedEmbs, augmentedEmbsSql, cosSql, shinglesSql, toksSql}
-import graft.queries.QueryDef.{spreadTable, table}
+import graft.queries.QueryDef.table
 import graft.functions.DecimalExprs.{dec2, cents2}
 
 /** Round-3 second widening: distributed clustering (k-means Lloyd
@@ -26,7 +26,7 @@ object MiningQueries {
   private val q73 = QueryDef(
     "q73_kmeans_iter",
     (s, dir) => {
-      val e = spreadTable(s, dir, "embeddings")
+      val e = Spread.wide(table(s, dir, "embeddings"))
       val assigned = Clustering.assignCells(e, Clustering.seedCentroids(e, 50))
       Clustering.centroidUpdate(assigned).orderBy(col("cell"), col("pos"))
     },
@@ -99,7 +99,7 @@ object MiningQueries {
       // scan (measured 0.76 s of the 1.2 s job total on 2 of 32
       // cores); the corpus feeds that single chain, so the spread is
       // paid once. No-op at multi-split tiers.
-      val aug = graft.operators.Spread.wide(augmentedEmbs(s, dir))
+      val aug = Spread.wide(augmentedEmbs(s, dir))
       // codebook from the BASE corpus (augmented copies assign to it),
       // element type widened to match the augmented vectors
       val cents = Clustering.seedCentroids(table(s, dir, "embeddings"), 50)

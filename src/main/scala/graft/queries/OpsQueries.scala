@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType, StringType}
 import graft.functions.TextFunctions
 import graft.queries.ExtensionQueries.toksSql
-import graft.queries.QueryDef.{eventsTable, spreadTable, table}
+import graft.operators.Spread
+import graft.queries.QueryDef.{eventsTable, table}
 import graft.functions.DecimalExprs.{dec2, cents2}
 
 /** Round-4 ops/decorrelation tier (q201–q205): the three classic
@@ -191,7 +192,7 @@ object OpsQueries {
     "q204_winnow_fingerprints",
     (s, dir) => {
       val P = lit(1048576L) // 2^20 position packing
-      val toks = spreadTable(s, dir, "documents")
+      val toks = Spread.wide(table(s, dir, "documents"))
         .select(col("doc_id"), TextFunctions.tokens(col("text")).as("t"))
         .filter(size(col("t")) >= 3)
       val pos = toks.select(col("doc_id"),
@@ -787,7 +788,7 @@ object OpsQueries {
     * drop via one left-anti join. Top 20 predicted links. */
   private val q211 = QueryDef(
     "q211_link_prediction",
-    (s, dir) => raLinkPrediction(spreadTable(s, dir, "lineitem")),
+    (s, dir) => raLinkPrediction(Spread.wide(table(s, dir, "lineitem"))),
     Some(raSql("lineitem")))
 
   /** q211's engine pipeline; `centerDecile=true` (q231) restricts the

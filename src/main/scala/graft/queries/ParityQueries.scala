@@ -178,9 +178,8 @@ object ParityQueries {
       // LogicalRDD scan instead of re-analyzing merge-1's whole DAG
       // three times — the operator scaladoc's chaining guidance;
       // cuts ~0.5 s of driver planning at sf0.1
-      val dim1 = Scd2.merge(Scd2.emptyDim(s, b1, spec), b1, spec, t0)
-        .localCheckpoint()
-      val dim2 = Scd2.merge(dim1, b2, spec, t1)
+      val dim1 = Scd2.merge(None, b1, spec, t0).localCheckpoint()
+      val dim2 = Scd2.merge(Some(dim1), b2, spec, t1)
       dim2.select(
           col("CustomerKey").as("customer_key"),
           col("CustomerID").as("customer_id"),

@@ -5,9 +5,9 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 import graft.functions.TextFunctions
-import graft.operators.Checkpoints
+import graft.operators.{Checkpoints, Spread}
 import graft.queries.ExtensionQueries.{shinglesSql, toksSql}
-import graft.queries.QueryDef.{spreadTable, table}
+import graft.queries.QueryDef.table
 import graft.functions.DecimalExprs.{dec2, cents2}
 
 /** Round-4 continuation: data-profiling / explainability tier —
@@ -81,11 +81,11 @@ object ProfilingQueries {
   private val q191 = QueryDef(
     "q191_dedup_evidence",
     (s, dir) => {
-      // spreadTable: the whole tokenize→shingle→posexplode→hash
+      // Spread.wide: the whole tokenize→shingle→posexplode→hash
       // pipeline fuses into the scan stage, which is one task on the
       // single-row-group fixture file — measured 2.2 s of the query's
       // 4.4 s steady state on one of 32 cores (guide §2.5)
-      val docs = QueryDef.spreadTable(s, dir, "documents")
+      val docs = Spread.wide(table(s, dir, "documents"))
       // heavy stages carry 8-byte xxhash64 shingle keys, never the
       // strings (q33's discipline; 64-bit collisions are ~1e-11 at
       // this vocabulary); evidence TEXT is recovered at the end by
@@ -184,11 +184,11 @@ object ProfilingQueries {
   private val q192 = QueryDef(
     "q192_bfs_levels",
     (s, dir) => {
-      // spreadTable on the streamed lineitem side: the single-split
+      // Spread.wide on the streamed lineitem side: the single-split
       // fixture scan fuses the broadcast-join probe + edge projection
       // into one task (guide §2.5); no-op at multi-split tiers
       val edges = table(s, dir, "orders")
-        .join(spreadTable(s, dir, "lineitem"),
+        .join(Spread.wide(table(s, dir, "lineitem")),
           col("o_orderkey") === col("l_orderkey"))
         .select((col("o_custkey") * 2).as("a"),
           (col("l_suppkey") * 2 + 1).as("b"))

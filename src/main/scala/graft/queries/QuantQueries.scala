@@ -1,9 +1,9 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
-import graft.operators.{Quantization, Similarity}
+import graft.operators.{Quantization, Similarity, Spread}
 import graft.queries.ExtensionQueries.cosSql
-import graft.queries.QueryDef.{spreadTable, table}
+import graft.queries.QueryDef.table
 
 /** Round-4 widening: compressed-index similarity search — int8
   * scalar quantization and product quantization (ADC) over the
@@ -103,7 +103,7 @@ object QuantQueries {
   private val q136 = QueryDef(
     "q136_pq_adc_ann",
     (s, dir) => {
-      val e = spreadTable(s, dir, "embeddings")
+      val e = Spread.wide(table(s, dir, "embeddings"))
       val cb = Quantization.pqTrain(e, nSub = 4, subDim = 16,
         every = 50, rounds = 1)
       val codes = Quantization.pqEncode(e, cb, nSub = 4, subDim = 16)

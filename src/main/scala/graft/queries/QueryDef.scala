@@ -42,50 +42,6 @@ object QueryDef {
       .computeIfAbsent(s"$sfDir/$name.parquet",
         path => spark.read.parquet(path))
 
-  /** Estimated physical-scan split count for a parquet path — the
-    * same bytes/maxPartitionBytes arithmetic Spark's file-source
-    * packing uses (openCost ignored: an under-estimate only ever
-    * keeps [[spreadScan]] on, which is the safe direction). Memoized
-    * per (path, maxPartitionBytes): the bench re-reads the same
-    * handful of paths hundreds of times. */
-  private val splitMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long), Long]()
-  private def scanSplits(spark: SparkSession, path: String): Long = {
-    val maxPB = spark.sessionState.conf.filesMaxPartitionBytes
-    splitMemo.computeIfAbsent((path, maxPB), { _ =>
-      def walk(f: java.io.File): Seq[java.io.File] =
-        if (f.isDirectory)
-          Option(f.listFiles()).fold(Seq.empty[java.io.File])(_.toSeq.flatMap(walk))
-        else Seq(f)
-      val files = walk(new java.io.File(path))
-        .filter(f => !f.getName.startsWith("_") && !f.getName.startsWith("."))
-      files.map(f => math.max(1L, (f.length + maxPB - 1) / maxPB)).sum
-    })
-  }
-
-  /** Scale-adaptive scan spread (optimization guide §2.5, "input
-    * skew: one huge unsplittable file"): the fixture tables are ONE
-    * parquet file with ONE row group, so the physical scan — and
-    * every operator Catalyst fuses into the scan stage: tokenize,
-    * shingle, hash, vector math — runs as ONE task regardless of
-    * core count. When the estimated split count of the backing path
-    * is below the cluster's parallelism, round-robin repartition to
-    * defaultParallelism immediately after the read so per-row compute
-    * uses the whole machine; the repartitioned bytes are bounded by
-    * construction (splits < cores ⇒ table < cores × maxPartitionBytes).
-    * On a real tier the scan has ≥ cores splits and this is a NO-OP —
-    * the extra exchange never exists at scale (the multi-file
-    * gen-/diverse- rigs hit the no-op path today). Apply to scans
-    * whose downstream per-row work dominates a one-pass re-shuffle of
-    * the rows (text/vector/edge pipelines), not blanket: a
-    * scan-dominated aggregate would pay serialization for nothing. */
-  def spreadTable(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    val df = table(spark, sfDir, name)
-    val par = spark.sparkContext.defaultParallelism
-    if (scanSplits(spark, s"$sfDir/$name.parquet") < par) df.repartition(par)
-    else df
-  }
-
   /** Deterministic md5-keyed decile stratum (the q224/q52/q183
     * sampling discipline): membership is a pure hash of the key
     * column, so any engine draws the identical stratum. Used by the

@@ -6,7 +6,7 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
 import graft.functions.TextFunctions
 import graft.operators.Clustering
 import graft.queries.ExtensionQueries.{cosSql, toksSql}
-import graft.queries.QueryDef.{eventsTable, spreadTable, table}
+import graft.queries.QueryDef.{eventsTable, table}
 import graft.functions.DecimalExprs.{dec2, cents2}
 
 /** Round-3 fourth widening: the retrieval / serving tier — keyword

@@ -329,13 +329,31 @@ object LakeIO {
     * need an external commit protocol (a lock or a transaction log),
     * which is out of scope for plain-parquet zones. */
   def readGoldRecovering(spark: SparkSession, zones: LakeZones,
-                         table: String): DataFrame = {
+                         table: String): DataFrame =
+    readGoldIfPresent(spark, zones, table)
+      .getOrElse(readGold(spark, zones, table))
+
+  /** [[readGoldRecovering]] for a table that may not exist yet: None
+    * only when, after repair, the table holds no data file (its first
+    * load — or a first load that died mid-write, leaving the directory
+    * empty or holding only a hidden `.spark-staging-*` dir). A table
+    * with data that cannot be read fails here as it would anywhere
+    * else — a read error is never taken for absence. */
+  def readGoldIfPresent(spark: SparkSession, zones: LakeZones,
+                        table: String): Option[DataFrame] = {
     import org.apache.hadoop.fs.Path
     val target = new Path(zones.gold(table))
     val fs = target.getFileSystem(spark.sessionState.newHadoopConf())
     recoverGold(fs, target, new Path(zones.gold(table) + ".staging"),
       new Path(zones.gold(table) + ".old"))
-    spark.read.parquet(zones.gold(table))
+    // Spark's file index skips `_`/`.` names the same way
+    def holdsData(dir: Path): Boolean = fs.listStatus(dir).exists { st =>
+      val name = st.getPath.getName
+      !name.startsWith("_") && !name.startsWith(".") &&
+        (st.isFile || holdsData(st.getPath))
+    }
+    if (fs.exists(target) && holdsData(target)) Some(readGold(spark, zones, table))
+    else None
   }
 
   def readGold(spark: SparkSession, zones: LakeZones, table: String): DataFrame =

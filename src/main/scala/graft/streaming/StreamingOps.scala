@@ -181,39 +181,40 @@ object StreamingOps {
     changes.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          // latestByKey needs a TOTAL order per key: equal-ts change
-          // events would otherwise pick a partition-dependent winner.
-          // A content hash breaks ties deterministically (identical
-          // duplicates tie harmlessly).
-          val tiebreak = xxhash64(
-            batch.columns.filterNot(_ == tsCol).map(col): _*)
-          // persist the deduped batch before the multi-action sequence
-          // (max-ts collect, then the merge's joins): without it each
-          // action re-scans the micro-batch source — the round-12
-          // streaming-scale run measured numInputRows at ~3x the event
-          // count, which at ingest scale is 2 extra passes over every
-          // arriving byte
-          val latest = graft.operators.Upsert
-            .latestByKey(batch.toDF(), Seq(spec.businessKey),
-              Seq(col(tsCol), tiebreak))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          try {
-            val now = latest.agg(max(col(tsCol))).head().getTimestamp(0)
-            val incoming = latest.drop(tsCol)
-            val dim =
-              try LakeIO.readGoldRecovering(spark, zones, table)
-              catch { case _: org.apache.spark.sql.AnalysisException =>
-                graft.operators.Scd2.emptyDim(spark, incoming, spec)
-              }
-            val next = graft.operators.Scd2.merge(
-              dim.localCheckpoint(), incoming, spec, lit(now))
-            LakeIO.replaceGold(next, zones, table)
-          } finally latest.unpersist()
-        }
+        mergeBatch(batch.toDF(), zones, table, spec, tsCol)(
+          LakeIO.replaceGold(_, zones, table))
       }
       .start()
+
+  /** The batch preparation [[scd2Sink]] and [[scd2PublishBatch]]
+    * share: merge a non-empty micro-batch's latest event per key into
+    * gold `dimTable` (absent on the first batch) and hand the next
+    * dimension state to `publish`. */
+  private def mergeBatch(batch: DataFrame, zones: LakeZones, dimTable: String,
+                         spec: graft.operators.Scd2.Spec, tsCol: String)(
+      publish: DataFrame => Unit): Unit = {
+    if (batch.isEmpty) return
+    // latestByKey needs a TOTAL order per key: equal-ts change events
+    // would otherwise pick a partition-dependent winner. A content hash
+    // breaks ties deterministically (identical duplicates tie
+    // harmlessly).
+    val tiebreak = xxhash64(
+      batch.columns.filterNot(_ == tsCol).map(col): _*)
+    // persist the deduped batch before the multi-action sequence
+    // (max-ts collect, then the merge's joins): without it each action
+    // re-scans the micro-batch source — the round-12 streaming-scale
+    // run measured numInputRows at ~3x the event count, which at ingest
+    // scale is 2 extra passes over every arriving byte
+    val latest = graft.operators.Upsert
+      .latestByKey(batch, Seq(spec.businessKey), Seq(col(tsCol), tiebreak))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      val now = latest.agg(max(col(tsCol))).head().getTimestamp(0)
+      val dim = LakeIO.readGoldIfPresent(batch.sparkSession, zones, dimTable)
+      publish(graft.operators.Scd2.merge(
+        dim.map(_.localCheckpoint()), latest.drop(tsCol), spec, lit(now)))
+    } finally latest.unpersist()
+  }
 
   /** Partitioned-gold variant of [[scd2Sink]]: same hash-diff SCD2
     * semantics, but the dimension is stored SPLIT so per-batch I/O is
@@ -273,27 +274,9 @@ object StreamingOps {
     * testing (replay = calling twice with the same `batchId`). */
   def scd2PublishBatch(batch: DataFrame, batchId: Long, zones: LakeZones,
                        table: String, spec: graft.operators.Scd2.Spec,
-                       tsCol: String = "ts"): Unit = {
-    if (batch.isEmpty) return
-    val spark = batch.sparkSession
-    // identical batch preparation to scd2Sink: latest event per key
-    // with a deterministic content-hash tiebreak, persisted once
-    val tiebreak = xxhash64(
-      batch.columns.filterNot(_ == tsCol).map(col): _*)
-    val latest = graft.operators.Upsert
-      .latestByKey(batch, Seq(spec.businessKey), Seq(col(tsCol), tiebreak))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val now = latest.agg(max(col(tsCol))).head().getTimestamp(0)
-      val incoming = latest.drop(tsCol)
-      val active =
-        try LakeIO.readGoldRecovering(spark, zones, s"${table}__active")
-        catch { case _: org.apache.spark.sql.AnalysisException =>
-          graft.operators.Scd2.emptyDim(spark, incoming, spec)
-        }
-      val next = graft.operators.Scd2.merge(
-          active.localCheckpoint(), incoming, spec, lit(now))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+                       tsCol: String = "ts"): Unit =
+    mergeBatch(batch, zones, s"${table}__active", spec, tsCol) { merged =>
+      val next = merged.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
         // the merge input held only active rows, so every inactive
         // output row was expired by THIS batch
@@ -304,8 +287,7 @@ object StreamingOps {
         }
         LakeIO.replaceGold(next.filter(col("IsActive")), zones, s"${table}__active")
       } finally next.unpersist()
-    } finally latest.unpersist()
-  }
+    }
 
   /** The complete dimension maintained by [[scd2SinkPartitioned]]:
     * active versions ∪ all closed runs (the `load_id` batch tag is
@@ -313,9 +295,8 @@ object StreamingOps {
     * [[scd2Sink]] would have produced from the same change stream. */
   def readScd2Dim(spark: SparkSession, zones: LakeZones, table: String): DataFrame = {
     val active = LakeIO.readGoldRecovering(spark, zones, s"${table}__active")
-    try active.unionByName(
-      LakeIO.readGold(spark, zones, s"${table}__closed").drop("load_id"))
-    catch { case _: org.apache.spark.sql.AnalysisException => active }
+    LakeIO.readGoldIfPresent(spark, zones, s"${table}__closed")
+      .fold(active)(closed => active.unionByName(closed.drop("load_id")))
   }
 
   /** Stream-static POINT-IN-TIME enrichment: each streamed fact row

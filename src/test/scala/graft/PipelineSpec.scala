@@ -113,6 +113,72 @@ class PipelineSpec extends SparkSpec {
     assert(LakeIO.readGold(spark, zones, "dim_customer").count() == 51)
   }
 
+  test("a dimension caught in a replaceGold rename window keeps its SCD2 history") {
+    val landing = mkTmp(); val lake = mkTmp()
+    writeLanding(landing)
+    val zones = LakeZones(lake)
+    Pipeline.run(spark, zones, landing, s"$landing/source_config.json",
+      LocalDate.of(2024, 6, 1), java.sql.Timestamp.valueOf("2024-06-01 00:00:00"))
+    // a crash after replaceGold retired the live dimension: only .old is left
+    Files.move(Paths.get(s"$lake/gold/dim_customer"),
+      Paths.get(s"$lake/gold/dim_customer.old"))
+    // day 2: every tenth customer changes category
+    val changed = (0 until 50).filter(_ % 10 == 0).map(10000L + _)
+    val f0101v2 = (0 until 50).map { i =>
+      val cat = if (i % 10 == 0) "999" else Seq("100", "200", "300")(i % 3)
+      s"${10000 + i},Company $i,C,$cat,124300"
+    }
+    Files.writeString(Paths.get(s"$landing/F0101.csv"),
+      "ABAN8,ABALPH,ABAT1,ABAC01,ABUPMJ\n" + f0101v2.mkString("\n"))
+    Pipeline.run(spark, zones, landing, s"$landing/source_config.json",
+      LocalDate.of(2024, 6, 2), java.sql.Timestamp.valueOf("2024-06-02 00:00:00"))
+
+    val dim = LakeIO.readGold(spark, zones, "dim_customer")
+    assert(dim.count() == 50 + changed.size)
+    // surrogate keys continue past day 1's instead of restarting at 1
+    assert(dim.select("CustomerKey").distinct().count() == 50 + changed.size)
+    val newKeys = dim.filter($"IsActive" && $"CustomerID".isin(changed: _*))
+      .select("CustomerKey").as[Long].collect()
+    assert(newKeys.length == changed.size && newKeys.forall(_ > 50), newKeys.mkString(","))
+    // every changed customer keeps its expired day-1 version
+    val expired = dim.filter(!$"IsActive").select("CustomerID").as[Long].collect()
+    assert(expired.sorted.toSeq == changed)
+  }
+
+  test("an unreadable fact table fails the load instead of restarting SalesKey") {
+    val landing = mkTmp(); val lake = mkTmp()
+    writeLanding(landing)
+    val zones = LakeZones(lake)
+    Pipeline.run(spark, zones, landing, s"$landing/source_config.json",
+      LocalDate.of(2024, 6, 1), java.sql.Timestamp.valueOf("2024-06-01 00:00:00"))
+    Files.writeString(
+      Paths.get(s"$lake/gold/fact_sales/load_id=2024-06-01/part-99999-junk.snappy.parquet"),
+      "not a parquet file")
+    intercept[Exception] {
+      Pipeline.run(spark, zones, landing, s"$landing/source_config.json",
+        LocalDate.of(2024, 6, 2), java.sql.Timestamp.valueOf("2024-06-02 00:00:00"))
+    }
+    // no day-2 partition was appended with keys restarted at 1
+    assert(!Files.exists(Paths.get(s"$lake/gold/fact_sales/load_id=2024-06-02")))
+  }
+
+  test("a first gold write that died leaving an empty table dir does not block the load") {
+    for (leftover <- Seq(None, Some(".spark-staging-x/load_id=2024-06-01"))) {
+      val landing = mkTmp(); val lake = mkTmp()
+      writeLanding(landing)
+      val zones = LakeZones(lake)
+      // what an aborted first dynamic-overwrite append leaves behind
+      Files.createDirectories(Paths.get(s"$lake/gold/fact_sales"))
+      leftover.foreach(p => Files.createDirectories(Paths.get(s"$lake/gold/fact_sales/$p")))
+      val fact = Pipeline.run(spark, zones, landing, s"$landing/source_config.json",
+        LocalDate.of(2024, 6, 1), java.sql.Timestamp.valueOf("2024-06-01 00:00:00"))
+      assert(fact.count() == 200, leftover)
+      val keys = LakeIO.readGold(spark, zones, "fact_sales")
+        .agg(min($"SalesKey"), max($"SalesKey")).head()
+      assert(keys.getLong(0) == 1L && keys.getLong(1) == 200L, leftover)
+    }
+  }
+
   test("compaction collapses small files atomically, preserving rows") {
     val lake = mkTmp()
     val zones = LakeZones(lake)

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.Scd2
 
@@ -20,7 +21,7 @@ class Scd2Spec extends SparkSpec {
     (10L, "Acme", "C", "100"), (20L, "Globex", "C", "200"))
 
   test("new keys insert as active with contiguous surrogate keys") {
-    val dim = Scd2.merge(Scd2.emptyDim(spark, b1, spec), b1, spec,
+    val dim = Scd2.merge(None, b1, spec,
       ts("2024-01-01 00:00:00"))
     val rows = dim.orderBy("CustomerKey")
       .select("CustomerKey", "CustomerID", "IsActive").as[(Long, Long, Boolean)]
@@ -30,10 +31,10 @@ class Scd2Spec extends SparkSpec {
   }
 
   test("changed hash expires old version and inserts new; unchanged untouched") {
-    val dim1 = Scd2.merge(Scd2.emptyDim(spark, b1, spec), b1, spec,
+    val dim1 = Scd2.merge(None, b1, spec,
       ts("2024-01-01 00:00:00")).cache()
     val b2 = batch((10L, "Acme Corp", "C", "100"), (20L, "Globex", "C", "200"))
-    val dim2 = Scd2.merge(dim1, b2, spec, ts("2024-06-01 00:00:00")).cache()
+    val dim2 = Scd2.merge(Some(dim1), b2, spec, ts("2024-06-01 00:00:00")).cache()
     assert(dim2.count() == 3)
     // old Acme version expired
     val old = dim2.filter($"CustomerID" === 10 && !$"IsActive").collect()
@@ -49,16 +50,16 @@ class Scd2Spec extends SparkSpec {
   }
 
   test("idempotence: merging the same batch twice changes nothing") {
-    val dim1 = Scd2.merge(Scd2.emptyDim(spark, b1, spec), b1, spec,
+    val dim1 = Scd2.merge(None, b1, spec,
       ts("2024-01-01 00:00:00")).cache()
-    val dim2 = Scd2.merge(dim1, b1, spec, ts("2024-06-01 00:00:00"))
+    val dim2 = Scd2.merge(Some(dim1), b1, spec, ts("2024-06-01 00:00:00"))
     assert(dim2.count() == dim1.count())
     assert(dim2.exceptAll(dim1).count() == 0)
   }
 
   test("randomized merge sequences match an in-memory model (SURVEY §5.2)") {
     val rnd = new scala.util.Random(42) // seeded → deterministic run
-    var dim = Scd2.emptyDim(spark, b1, spec)
+    var prev: Option[DataFrame] = None
     var model = Map.empty[Long, (String, String, String)]
     var versions = 0L
     for (step <- 1 to 6) {
@@ -74,8 +75,9 @@ class Scd2Spec extends SparkSpec {
         // key-seed), so an unbroken 6-deep chain grows the analyzed
         // plan ~3^n and stalls planning. Real pipelines break it the
         // same way by persisting the dimension between runs.
-        dim = Scd2.merge(dim, batch(rows: _*), spec,
+        val dim = Scd2.merge(prev, batch(rows: _*), spec,
           ts(f"2024-0$step%d-01 00:00:00")).localCheckpoint()
+        prev = Some(dim)
         model ++= changed.map(r => r._1 -> ((r._2, r._3, r._4)))
         versions += changed.size
         // model agreement: active rows are exactly the model state
@@ -103,9 +105,9 @@ class Scd2Spec extends SparkSpec {
     val b2 = batch((10L, "Acme2", "C", "100"), (20L, "Globex", "C", "999"),
       (30L, "Initech", "C", "300"))
     val b3 = batch((10L, "Acme3", "C", "100"))
-    val d1 = Scd2.merge(Scd2.emptyDim(spark, b1, spec), b1, spec, ts("2024-01-01 00:00:00")).cache()
-    val d2 = Scd2.merge(d1, b2, spec, ts("2024-02-01 00:00:00")).cache()
-    val d3 = Scd2.merge(d2, b3, spec, ts("2024-03-01 00:00:00")).cache()
+    val d1 = Scd2.merge(None, b1, spec, ts("2024-01-01 00:00:00")).cache()
+    val d2 = Scd2.merge(Some(d1), b2, spec, ts("2024-02-01 00:00:00")).cache()
+    val d3 = Scd2.merge(Some(d2), b3, spec, ts("2024-03-01 00:00:00")).cache()
     val active = d3.filter($"IsActive").groupBy("CustomerID").count()
       .filter($"count" =!= 1).count()
     assert(active == 0)
@@ -128,7 +130,7 @@ class Scd2Spec extends SparkSpec {
     // the expire semi join AND the untouched anti join all carry rows.
     val b2 = batch((10L, "Acme Corp", "C", "100"), (20L, "Globex", "C", "200"),
       (30L, "Initech", "C", "300"))
-    val dim1 = Scd2.merge(Scd2.emptyDim(spark, b1, spec), b1, spec,
+    val dim1 = Scd2.merge(None, b1, spec,
       ts("2024-01-01 00:00:00")).localCheckpoint()
     def bhjCount(df: org.apache.spark.sql.DataFrame): Int = {
       val plan = df.queryExecution.executedPlan match {
@@ -150,13 +152,13 @@ class Scd2Spec extends SparkSpec {
     val prevBc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB")
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val shuffled = Scd2.merge(dim1, b2, spec, ts("2024-06-01 00:00:00"),
+      val shuffled = Scd2.merge(Some(dim1), b2, spec, ts("2024-06-01 00:00:00"),
         dimBroadcastMaxRows = 0L)
       assert(bhjCount(shuffled) == 0,
         "active-rows(2) > bound(0): lookup and expire joins must not broadcast")
       // control: the default bound broadcasts (proves the re-decision,
       // not just the absence of broadcasts under a hostile conf)
-      val bcast = Scd2.merge(dim1, b2, spec, ts("2024-06-01 00:00:00"))
+      val bcast = Scd2.merge(Some(dim1), b2, spec, ts("2024-06-01 00:00:00"))
       assert(bhjCount(bcast) >= 2,
         "within the bound the lookup AND expire joins broadcast")
       assert(shuffled.exceptAll(bcast).count() == 0 &&
@@ -170,12 +172,12 @@ class Scd2Spec extends SparkSpec {
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
     val b2 = batch((10L, "Acme Corp", "C", "100"), (30L, "Initech", "C", "300"))
-    val dim1 = Scd2.merge(Scd2.emptyDim(spark, b1, spec), b1, spec,
+    val dim1 = Scd2.merge(None, b1, spec,
       ts("2024-01-01 00:00:00")).localCheckpoint()
     val prevBc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB")
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val d = Scd2.merge(dim1, b2, spec, ts("2024-06-01 00:00:00"),
+      val d = Scd2.merge(Some(dim1), b2, spec, ts("2024-06-01 00:00:00"),
         broadcastDim = false)
       val plan = d.queryExecution.executedPlan match {
         case a: AdaptiveSparkPlanExec => a.initialPlan
@@ -192,5 +194,30 @@ class Scd2Spec extends SparkSpec {
       assert(bhj == 0, s"broadcastDim=false must leave no BHJ, found $bhj")
       assert(d.filter($"IsActive").count() == 3 && d.count() == 4)
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
+  }
+
+  // Building a merge executes plans of its own: the key assignment
+  // (Ids.addContiguousIds) materializes one checkpoint, and a merge
+  // into an existing dimension runs the max-key probe first. Nothing
+  // else executes: an RDD partition count over a dimension with
+  // exchanges would be one more plan execution.
+
+  test("a seed merge into an absent dimension runs only its key-assignment checkpoint") {
+    val (dim, jobs) = jobsDuring(Scd2.merge(None, b1, spec, ts("2024-01-01 00:00:00")))
+    assert(jobs.forall(_.nonEmpty), s"jobs outside any SQL action: $jobs")
+    assert(jobs.flatten.distinct.size == 1, s"SQL actions while building: $jobs")
+    assert(dim.count() == 2)
+  }
+
+  test("a merge into an existing dimension runs only its probe and key-assignment checkpoint") {
+    // not checkpointed: the dimension's plan carries the exchanges of
+    // the seed merge's key assignment
+    val dim1 = Scd2.merge(None, b1, spec, ts("2024-01-01 00:00:00"))
+    val b2 = batch((10L, "Acme Corp", "C", "100"), (30L, "Initech", "C", "300"))
+    val (dim2, jobs) = jobsDuring(
+      Scd2.merge(Some(dim1), b2, spec, ts("2024-06-01 00:00:00")))
+    assert(jobs.forall(_.nonEmpty), s"jobs outside any SQL action: $jobs")
+    assert(jobs.flatten.distinct.size == 2, s"SQL actions while building: $jobs")
+    assert(dim2.count() == 4)
   }
 }
